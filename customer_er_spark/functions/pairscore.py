@@ -82,6 +82,21 @@ def collect_bounded_matrix(
     return ids[order], mat[order]
 
 
+def row_index(ids: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """Rows of `v`'s ids in the sorted broadcast `ids`.  searchsorted alone
+    would score a missing id against its neighbouring row (or index past
+    the end), so every lookup is checked and a miss raises, naming the
+    first missing id."""
+    idx = np.searchsorted(ids, v)
+    hit = idx < len(ids)
+    hit[hit] = ids[idx[hit]] == v[hit]
+    if not hit.all():
+        raise KeyError(
+            f"pair id {int(v[~hit][0])} is not in the broadcast signature matrix"
+        )
+    return idx
+
+
 def ordered_norms(mat: np.ndarray) -> np.ndarray:
     """sqrt of the left-to-right sum of squares per row — bit-identical to
     sqrt(_norm2_unrolled(...))'s chained adds."""
@@ -135,8 +150,8 @@ def cosine_pair_scores(
         for rb in batches:  # column order fixed by the select() below
             lv = rb.column(0).to_numpy(zero_copy_only=False)
             rv = rb.column(1).to_numpy(zero_copy_only=False)
-            li = np.searchsorted(ids_, lv)
-            ri = np.searchsorted(ids_, rv)
+            li = row_index(ids_, lv)
+            ri = row_index(ids_, rv)
             prod = mat_[li] * mat_[ri]
             if rb.num_rows:
                 acc = prod[:, 0].copy()
@@ -187,7 +202,7 @@ def equality_fraction_pair_scores(
             lv = rb.column(0).to_numpy(zero_copy_only=False)
             rv = rb.column(1).to_numpy(zero_copy_only=False)
             eq = (
-                (mat_[np.searchsorted(ids_, lv)] == mat_[np.searchsorted(ids_, rv)])
+                (mat_[row_index(ids_, lv)] == mat_[row_index(ids_, rv)])
                 .sum(axis=1)
                 .astype(np.float64)
                 if rb.num_rows

@@ -27,6 +27,15 @@ short-cuts that limit which records should be compared"):
     probability decays geometrically.  Every degraded band is recorded in
     band_stats (n_members, n_salts) — no silent caps.
 
+Consumers: the initial pipeline's candidate stage AND the incremental
+link (both via candidates.candidate_pairs_from_bands), MinHash/SimHash
+dedup, the cosine prefix join and hyperplane top-k.  Self-joins order
+each pair by id.  The bipartite link orders it by a side tag instead
+(order_col: 0 = prior, 1 = incoming), so only cross-source pairs pass
+the join condition, and skips the hot-band representative chain: the
+chain only keeps a self-join flood connected, and its edges could join
+two same-side records.
+
 Execution shape (ONE exchange + one distinct): repartition(band_key) ->
 window count over band_key (reuses the exchange) -> co-partitioned
 shuffled-hash SELF-JOIN on (band_key, salt) (HashPartitioning(band_key)
@@ -41,7 +50,6 @@ set, ~2.6x faster cold on the sf1.0 minhash bands.)
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
@@ -110,21 +118,17 @@ def salted_bands(
         # chain, plus band_stats when the caller keeps it), and Spark
         # does not reuse the identical exchange subtrees across them —
         # measured 3x evaluation of the caller's banding UDF without
-        # this.  eager=False keeps plan BUILDING side-effect-free (the
-        # incremental planner and dump_plans compose without executing);
-        # the first action computes the narrow (id, band_key, salt) rows
-        # once and every consumer reads the stored blocks.  Single-box
+        # this.  eager=False defers the block write to the first action,
+        # which computes the narrow (id, band_key, salt) rows once; every
+        # consumer reads the stored blocks.  (Under AQE, building the
+        # checkpoint RDD already runs the band_key shuffle stage — one job
+        # at plan-build time, inside the caller's job group.)  Single-box
         # caveat (non-recomputable blocks on executor loss) is the same
         # accepted trade as operators/materialize.py's fallback mode —
         # cluster deployments re-run the enclosing stage from its
         # catalog-committed inputs.
+        .localCheckpoint(eager=False)
     )
-    if not os.environ.get("SPARK_GRAFT_PLAN_FULL"):
-        # SPARK_GRAFT_PLAN_FULL is a plan-INTROSPECTION switch for
-        # tools/dump_r08_plans.py only: the executed plan always has the
-        # barrier (shown as Scan ExistingRDD); the full variant shows the
-        # subtree the barrier materializes.
-        salted = salted.localCheckpoint(eager=False)
     per_band = salted.groupBy("band_key").agg(
         F.first("n_members").alias("n_members"),
         F.first("n_salts").alias("n_salts"),
@@ -158,6 +162,7 @@ def banded_pairs(
     shuffle_partitions: int,
     emit_payload: bool = False,
     distinct: bool = True,
+    order_col: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Distinct skew-safe within-bucket pairs from (id, band_key) rows.
 
@@ -181,11 +186,18 @@ def banded_pairs(
                   sf1.0 the minhash verify kept 2.5k of 21.2M candidate
                   pairs, so deduping before scoring shuffled 21.2M rows to
                   protect a 2.5k-row distinct.
+    order_col     the column that orders each pair (default: the id).
+                  A non-payload column of `bands`; pairs keep
+                  l.<col> < r.<col>, the column is not emitted, and the
+                  rep chain is skipped (see the module docstring).
 
-    Returns (pairs, band_stats); pairs has id_l < id_r, distinct unless
-    distinct=False (then multiplicity = number of shared buckets).
+    Returns (pairs, band_stats); pairs has id_l < id_r (or the order_col
+    order), distinct unless distinct=False (then multiplicity = number of
+    shared buckets).
     """
-    mem_struct = F.struct(F.col(id_col).alias("id"), *payload_cols)
+    key = order_col or "id"
+    extra = [] if order_col is None else [order_col]
+    mem_struct = F.struct(F.col(id_col).alias("id"), *payload_cols, *extra)
     repart = bands.repartition(shuffle_partitions, "band_key")
     salted, band_stats = salted_bands(repart, max_band_size, id_col)
 
@@ -208,54 +220,54 @@ def banded_pairs(
     side = salted.select("band_key", "salt", mem_struct.alias("m"), "n_salts")
     a = side.select("band_key", "salt", F.col("m").alias("l"))
     b = side.select("band_key", "salt", F.col("m").alias("r")).hint("shuffle_hash")
-    pair_cond = F.col("l.id") < F.col("r.id")
+    pair_cond = F.col(f"l.{key}") < F.col(f"r.{key}")
     if gate:
         pair_cond = pair_cond & F.expr(gate.format(l="l", r="r"))
     out_cols = [F.col("p.l.id").alias("id_l"), F.col("p.r.id").alias("id_r")]
     if emit_payload:
         out_cols += [F.col(f"p.l.{c}").alias(f"{c}_l") for c in payload_cols]
         out_cols += [F.col(f"p.r.{c}").alias(f"{c}_r") for c in payload_cols]
-    pairs_within = (
+    pairs = (
         a.join(b, ["band_key", "salt"])
         .where(pair_cond)
         .select(F.struct(F.col("l"), F.col("r")).alias("p"))
         .select(*out_cols)
     )
 
-    # chain sub-bucket representatives of each hot band so a genuinely
-    # all-matching hot band (exact-duplicate flood) stays connected even
-    # when two members never co-locate in a sub-bucket.  min(struct) ==
-    # element_at(array_sort(collect_list(struct)), 1): both order structs
-    # lexicographically by (id, payload...).
-    reps = (
-        side.where(F.col("n_salts") > 1)
-        .groupBy("band_key", "salt")
-        .agg(F.min("m").alias("rep"))
-    )
-    wchain = Window.partitionBy("band_key").orderBy("salt")
-    chain_cond = F.col("nxt").isNotNull() & (
-        F.col("rep.id") != F.col("nxt.id")
-    )
-    if gate:
-        chain_cond = chain_cond & F.expr(gate.format(l="rep", r="nxt"))
-    chain = (
-        reps.withColumn("nxt", F.lead("rep").over(wchain))
-        .where(chain_cond)
-        # order the pair by id, payload following its id
-        .select(
-            F.when(
-                F.col("rep.id") < F.col("nxt.id"),
-                F.struct(F.col("rep").alias("l"), F.col("nxt").alias("r")),
-            )
-            .otherwise(
-                F.struct(F.col("nxt").alias("l"), F.col("rep").alias("r"))
-            )
-            .alias("p")
+    if order_col is None:  # bipartite callers skip the chain (module docstring)
+        # chain sub-bucket representatives of each hot band so a genuinely
+        # all-matching hot band (exact-duplicate flood) stays connected
+        # even when two members never co-locate in a sub-bucket.
+        # min(struct) == element_at(array_sort(collect_list(struct)), 1):
+        # both order structs lexicographically by (id, payload...).
+        reps = (
+            side.where(F.col("n_salts") > 1)
+            .groupBy("band_key", "salt")
+            .agg(F.min("m").alias("rep"))
         )
-        .select(*out_cols)
-    )
-
-    pairs = pairs_within.unionByName(chain)
+        wchain = Window.partitionBy("band_key").orderBy("salt")
+        chain_cond = F.col("nxt").isNotNull() & (
+            F.col("rep.id") != F.col("nxt.id")
+        )
+        if gate:
+            chain_cond = chain_cond & F.expr(gate.format(l="rep", r="nxt"))
+        chain = (
+            reps.withColumn("nxt", F.lead("rep").over(wchain))
+            .where(chain_cond)
+            # order the pair by id, payload following its id
+            .select(
+                F.when(
+                    F.col("rep.id") < F.col("nxt.id"),
+                    F.struct(F.col("rep").alias("l"), F.col("nxt").alias("r")),
+                )
+                .otherwise(
+                    F.struct(F.col("nxt").alias("l"), F.col("rep").alias("r"))
+                )
+                .alias("p")
+            )
+            .select(*out_cols)
+        )
+        pairs = pairs.unionByName(chain)
     if distinct:
         pairs = pairs.distinct()  # one shuffle on the pair key; AQE coalesces
     # hand eagerly-materializing callers the lazy-checkpoint handle so they

@@ -15,37 +15,17 @@ never collide across sources):
     guaranteed recall for visually near-identical pairs regardless of
     caption damage.
 
-Skew policy — SUB-BAND SALTING (explicit, per north_rule; AQE skew-join
-splits input partitions but cannot bound the O(m^2) *output* of a hot band):
-  * buckets with <= max_band_size members: full within-bucket self-join
-    (all pairs, id_l < id_r).
-  * hot buckets (> max_band_size members): split into
-    k = ceil(m / max_band_size) sub-buckets by a deterministic per-(record,
-    band) salt = xxhash64(image_id, band_key) % k.  ALL pairs are generated
-    within each sub-bucket, and the sub-buckets' min-id representatives are
-    chained (rep_i — rep_{i+1}) so a hot band whose members genuinely
-    inter-verify (e.g. an exact-duplicate flood) stays one connected
-    component.  Pair volume per hot band is O(m * max_band_size), never
-    O(m^2).
-
-  Recall accounting (honest, no silent loss): a true near-dup pair inside a
-  hot band co-locates in one of its sub-buckets with probability ~1/k *per
-  band*; the salt folds in band_key, so co-location events are independent
-  across the (typically many) bands a true pair shares — pairs with caption
-  Jaccard s share ~b*s^r MinHash bands and near-identical images share up
-  to C(chunks, clean) pHash keys, so the miss probability decays
-  geometrically in the number of shared bands.  Unlike the previous "star"
-  policy (every member paired only with the band's min-id rep), no pair's
-  survival depends on an arbitrary representative verifying against it.
-  Every degraded band is recorded in band_stats (n_members, n_salts) so the
-  recall budget is auditable.
-
-Scale notes: bucket sizes come from a window count over band_key
-immediately after repartition(shuffle_partitions, band_key) — same key, no
-extra shuffle and no broadcast of an unbounded band list; the sub-bucket
-self-join shuffles once on (band_key, salt), whose cardinality is bounded
-by max_band_size by construction, so no AQE skew splitting is even needed
-downstream.
+Pair expansion, for the initial pipeline and the incremental link alike,
+is the engine's one blocking kernel, operators/banded.banded_pairs: one
+band_key exchange, SUB-BAND SALTING of hot buckets (> max_band_size
+members; AQE skew-join splits input partitions but cannot bound the
+O(m^2) *output* of a hot band), the Hamming gate inside the join, and
+every degraded band recorded in band_stats.  That module documents the
+policy and its recall accounting.  For image pairs the per-band
+co-location events compound quickly: pairs with caption Jaccard s share
+~b*s^r MinHash bands and near-identical images share up to C(chunks,
+clean) pHash keys, so a true pair's miss probability in hot bands decays
+geometrically in the number of bands it shares.
 """
 
 from __future__ import annotations
@@ -54,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from customer_er_spark.config import ERConfig
-from customer_er_spark.operators.banded import banded_pairs, salted_bands
+from customer_er_spark.operators.banded import banded_pairs
 
 
 def band_keys(signatures: DataFrame, cfg: ERConfig) -> DataFrame:
@@ -181,34 +161,29 @@ def band_write_options(cfg: ERConfig, n_records: int) -> dict:
     }
 
 
-def salted_buckets(bands: DataFrame, cfg: ERConfig) -> tuple[DataFrame, DataFrame]:
-    """(image_id, band_key)[, extra cols] -> (salted, band_stats).
-
-    Thin image-pipeline wrapper over the engine-wide kernel in
-    operators/banded.py (salted_bands) — see that module for the policy,
-    audit-trail, and execution-shape documentation.
-    """
-    return salted_bands(bands, cfg.max_band_size, id_col="image_id")
-
-
 def candidate_pairs_from_bands(
-    bands: DataFrame, cfg: ERConfig
+    bands: DataFrame, cfg: ERConfig, order_col: str | None = None
 ) -> tuple[DataFrame, DataFrame]:
-    """candidate_pairs over a PRECOMPUTED (image_id, phash, band_key)
-    band table — the entry point for callers that persist band rows (the
-    pipeline commits them as `priors_bands` so increments can join against
-    the registry's bands instead of re-exploding every prior record).
+    """(pairs(id_l, id_r, hamming), band_stats) over a PRECOMPUTED
+    (image_id, phash, band_key) band table — the one candidate generator
+    of both phases.  The pipeline passes the `priors_bands` rows it
+    commits (so increments can join against the registry's bands instead
+    of re-exploding every prior record); the incremental link passes its
+    touched-band priors plus the increment's bands with
+    order_col="side" (0 = prior, 1 = incoming), so every pair is
+    (prior, incoming) — see operators/banded.py.
 
-    Emits phash_l/phash_r with every pair (emit_payload): the band join
-    already paid for both hashes, so verify_pairs computes its tier-0
-    Hamming inline instead of re-attaching (id, phash) through two joins
-    — the r5 profile showed those joins as pure fixed cost in the
-    verified_pairs stage (the gate guarantees they add no filtering)."""
+    hamming rides along with every pair: the band join already paid for
+    both hashes, so verify_pairs takes its tier-0 Hamming as given
+    instead of re-attaching (id, phash) through two joins — the r5
+    profile showed those joins as pure fixed cost in the verified_pairs
+    stage (the gate guarantees they add no filtering).  Pairs are
+    deduplicated on this narrow row (hamming is a function of the pair)."""
     # ONE exchange total (see operators/banded.py for the full shape): the
     # Hamming feasibility gate runs in-partition, in codegen, BEFORE the
     # distinct shuffle — the quadratic tail of random band-key collisions
     # (measured 17.4M of 17.4M pairs at 240k images) is never shuffled.
-    return banded_pairs(
+    pairs, band_stats = banded_pairs(
         bands,
         id_col="image_id",
         payload_cols=("phash",),
@@ -216,15 +191,22 @@ def candidate_pairs_from_bands(
         max_band_size=cfg.max_band_size,
         shuffle_partitions=cfg.shuffle_partitions,
         emit_payload=True,
+        distinct=False,
+        order_col=order_col,
+    )
+    hamming = F.bit_count(F.col("phash_l").bitwiseXOR(F.col("phash_r")))
+    return (
+        pairs.select("id_l", "id_r", hamming.alias("hamming")).distinct(),
+        band_stats,
     )
 
 
 def candidate_pairs(
     signatures: DataFrame, cfg: ERConfig
 ) -> tuple[DataFrame, DataFrame]:
-    """Returns (pairs(id_l, id_r), band_stats) — distinct unordered pairs
-    that are HAMMING-FEASIBLE (bit_count(phash_l^phash_r) <=
-    phash_hamming_max).
+    """Returns (pairs(id_l, id_r, hamming), band_stats) — distinct
+    unordered pairs that are HAMMING-FEASIBLE (hamming =
+    bit_count(phash_l ^ phash_r) <= phash_hamming_max).
 
     The feasibility gate is semantically lossless: verification requires
     the same Hamming bound for is_match, so a gate-failed pair can never
@@ -233,6 +215,6 @@ def candidate_pairs(
     band-key collisions is never shuffled or materialized.
 
     band_stats (degraded bands exact + band-size histogram, see
-    salted_buckets) feeds the metrics table.
+    operators/banded.salted_bands) feeds the metrics table.
     """
     return candidate_pairs_from_bands(band_keys(signatures, cfg), cfg)

@@ -244,12 +244,13 @@ def simhash_sql(
         # map-side vote aggregation (the stage's dominant cost) on ONE
         # task.  The shuffle moved is just (id, normalized text) — narrow
         # — and it is a no-op when the scan already offers enough splits.
+        # Width = the session's shuffle partitions (tracks the cores).
         fan_out(
             docs.select(
                 F.col(id_col).alias("doc_id"),
                 normalize_caption(F.col(text_col)).alias("t"),
             ).where(F.length("t") > 0),
-            32,
+            int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions")),
             "doc_id",
         )
         .select("doc_id", F.explode(F.split("t", " ")).alias("tk"))

@@ -442,12 +442,13 @@ def ivf_topk(
     )
     from customer_er_spark.functions.partitioning import fan_out
 
-    # same adaptive fan-out + broadcast-scorer shape as lsh_topk
+    # same adaptive fan-out + broadcast-scorer shape as lsh_topk, at the
+    # session's shuffle width (ivf_topk takes no partition-count argument)
     base = fan_out(
         embeddings.select(
             F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
         ),
-        32,
+        int(embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions")),
         "vid",
     )
     base = base.persist()

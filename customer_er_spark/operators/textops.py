@@ -393,10 +393,7 @@ def duplicate_spans(
     # residual skewed join is AQE-splittable, which a window never is.
     # Same rows out: a position survives iff its gram hash occurs ≥ 2
     # times, exactly the predicate the window computed.
-    import os as _os
-
-    if not _os.environ.get("SPARK_GRAFT_PLAN_FULL"):  # see banded.salted_bands
-        grams = grams.localCheckpoint(eager=False)  # two consumers, one compute
+    grams = grams.localCheckpoint(eager=False)  # two consumers, one compute
     dup_gh = (
         grams.groupBy("gh")
         .agg(F.count("*").alias("c"))

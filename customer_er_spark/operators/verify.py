@@ -5,7 +5,8 @@ Replaces Zingg's learned pairwise scorer (FUZZY MatchTypes,
 cost-tiered cascade — cheapest check first, each tier runs on strictly
 fewer rows:
 
-  tier 0 (pure SQL)     hamming = bit_count(phash_l XOR phash_r), attached
+  tier 0 (pure SQL)     hamming = bit_count(phash_l XOR phash_r), as the
+                        banded candidate generator emits it, or attached
                         from an (id, phash)-only projection — gate-failed
                         pairs (the vast majority of LSH candidates) never
                         see the wide MinHash arrays or any later tier
@@ -244,8 +245,8 @@ def verify_pairs(
     Tier-0 FIRST, with the narrowest possible attach: the pHash Hamming
     gate joins only (image_id, phash) — 8 bytes per side — to every
     candidate pair (and not even that when the pairs already carry
-    hamming or phash_l/phash_r from their generator — see the tier-0
-    input note in the body).  On realistic corpora the bulk of LSH candidates are
+    hamming from their generator — see the tier-0 input note in the
+    body).  On realistic corpora the bulk of LSH candidates are
     random 16-bit band-key collisions that fail this gate; shipping the
     full MinHash array (~1 KB per side) to those pairs would dominate the
     verify shuffle (measured: 17.4M candidates for 240k images, almost all
@@ -261,25 +262,18 @@ def verify_pairs(
     No broadcast hints anywhere: the refinement sets are data-dependent;
     AQE picks broadcast at runtime when a side is actually small.
     """
-    # tier-0 input: callers whose pair generator already paid for the
-    # hashes (the banded candidate join emits phash_l/phash_r; the
-    # incremental link emits hamming itself) skip the two-attach join —
-    # it cannot filter anything the in-band gate didn't, so recomputing
-    # bit_count inline is strictly cheaper than two joins over signatures
+    # tier-0 input: the banded candidate generator (both the pipeline's
+    # candidate stage and the incremental link) already paid for the
+    # hashes and emits hamming with every pair, so its pairs skip the
+    # two-attach join — it cannot filter anything the in-band gate
+    # didn't.  Bare (id_l, id_r) pairs, and candidate_pairs snapshots
+    # committed before hamming rode along, take the attach join.
     if "hamming" in pairs.columns:
         ph = pairs.select("id_l", "id_r", "hamming")
-    elif {"phash_l", "phash_r"}.issubset(pairs.columns):
-        ph = pairs.select(
-            "id_l",
-            "id_r",
-            F.bit_count(
-                F.col("phash_l").bitwiseXOR(F.col("phash_r"))
-            ).alias("hamming"),
-        )
     else:
         sig_ph = signatures.select("image_id", "phash")
         ph = (
-            pairs.join(
+            pairs.select("id_l", "id_r").join(
                 sig_ph.select(
                     F.col("image_id").alias("id_l"),
                     F.col("phash").alias("phash_l"),

@@ -30,8 +30,11 @@ Ours, made concrete and cheaper:
     read ≈ touched buckets of the initial snapshot + O(actual candidate
     collisions) of the appended files, ~independent of how many
     increments the registry has absorbed;
-  * the bipartite band join only keeps cross-source pairs by construction,
-    with the same hot-band sub-bucket salting as the initial pipeline;
+  * the bipartite band join runs on the initial pipeline's own candidate
+    generator (the salted banded kernel, operators/banded.py): band rows
+    carry a side tag (0 = prior, 1 = incoming) and each pair is ordered
+    by it, so only cross-source pairs survive, with the same hot-band
+    sub-bucket salting and Hamming gate as the initial pipeline;
   * the threshold rules are code, not prose: accept iff best score >=
     match_threshold AND the runner-up is not itself accept-grade (ambiguous
     multi-link -> review, mirroring 03:283-288's "manual review" rule);
@@ -72,6 +75,7 @@ from customer_er_spark.operators.candidates import (
     band_write_options,
     bands_per_record,
     candidate_pairs,
+    candidate_pairs_from_bands,
     with_band_bucket,
 )
 from customer_er_spark.operators.components import connected_components
@@ -86,9 +90,9 @@ VERIFY_COLS = [
 def link_pairs(
     priors_bands: DataFrame, incoming_sig: DataFrame, cfg: ERConfig
 ) -> tuple[DataFrame, DataFrame]:
-    """Bipartite LSH candidates: (pairs(id_l=prior, id_r=incoming),
-    band_stats) — cross-source only, no within-source pairs (those belong
-    to match, not link).
+    """Bipartite LSH candidates: (pairs(id_l=prior, id_r=incoming,
+    hamming), band_stats) — cross-source only, no within-source pairs
+    (those belong to match, not link).
 
     `priors_bands` is the COMMITTED (band_key, image_id, phash) table the
     initial pipeline wrote and every merge appends to — priors are banded
@@ -101,64 +105,30 @@ def link_pairs(
     BEFORE any shuffle.  The distinct-key side is tiny for a micro-batch,
     so AQE plans the join as a broadcast hash join over the pruned scan:
     the registry is never exploded or window-counted, and only the
-    touched-band prior rows ride the single band_key exchange below.
+    touched-band prior rows ride the kernel's single band_key exchange.
     Dropping priors in untouched bands is lossless — a band with no
     incoming member can produce no cross pair.
 
-    Skew policy mirrors candidate_pairs, applied to the SURVIVING rows:
-    touched-band priors + incoming bands are unioned, bucket sizes counted
-    once, and hot bands (prior+incoming members > max_band_size) are
-    salted into sub-buckets; cross-side pairs are generated within each
-    sub-bucket, so one hot band shared by m priors and n incoming yields
-    O((m+n)*max_band_size) pairs, never O(m*n).  band_stats records every
-    degraded band among the touched bands (the only ones this run can
-    degrade — same audit contract as the initial pipeline)."""
-    from customer_er_spark.operators.candidates import salted_buckets
-
+    Pair expansion is the pipeline's own candidate generator
+    (candidate_pairs_from_bands -> operators/banded.banded_pairs) over the
+    surviving rows, tagged side = 0 (prior) / 1 (incoming) and ordered by
+    that tag, so the kernel keeps only (prior, incoming) pairs and skips
+    the self-join representative chain.  Same skew policy and Hamming
+    gate as the initial pipeline: hot bands (prior+incoming members >
+    max_band_size) are salted into sub-buckets, so one hot band shared by
+    m priors and n incoming yields O((m+n)*max_band_size) pairs, never
+    O(m*n), and band_stats records every degraded band among the touched
+    bands (the only ones this run can degrade)."""
     ib = band_keys(incoming_sig, cfg).select(
-        "band_key", "image_id", "phash", F.lit("i").alias("side")
+        "band_key", "image_id", "phash", F.lit(1).alias("side")
     )
     inc_keys = ib.select("band_key").distinct()
     pb = priors_bands.join(inc_keys, "band_key").select(
-        "band_key", "image_id", "phash", F.lit("p").alias("side")
+        "band_key", "image_id", "phash", F.lit(0).alias("side")
     )
-    both = pb.unionByName(ib).repartition(cfg.shuffle_partitions, "band_key")
-    salted, band_stats = salted_buckets(both, cfg)
-    # in-partition cross-side expansion (same single-exchange shape as
-    # candidate_pairs: groupBy(band_key, salt) is satisfied by the band_key
-    # partitioning) with the Hamming feasibility gate applied inline —
-    # infeasible cross pairs can never verify, so they die in codegen
-    # before the distinct exchange
-    buckets = salted.groupBy("band_key", "salt").agg(
-        F.expr(
-            "collect_list(CASE WHEN side = 'p' "
-            "THEN struct(image_id, phash) END)"
-        ).alias("ps"),
-        F.expr(
-            "collect_list(CASE WHEN side = 'i' "
-            "THEN struct(image_id, phash) END)"
-        ).alias("inc"),
+    return candidate_pairs_from_bands(
+        pb.unionByName(ib), cfg, order_col="side"
     )
-    pair_expr = F.expr(
-        f"""
-        flatten(transform(ps, x ->
-          filter(
-            transform(inc, y -> struct(x.image_id AS id_l,
-                                       y.image_id AS id_r,
-                                       bit_count(x.phash ^ y.phash) AS hd)),
-            p -> p.hd <= {cfg.phash_hamming_max})))
-        """
-    )
-    # hamming rides along (computed for the gate anyway): verify_pairs
-    # skips its tier-0 attach join on pairs that already carry it.
-    # distinct over (id_l, id_r, hamming) equals distinct over the pair —
-    # hamming is a function of the two ids.
-    pairs = (
-        buckets.select(F.explode(pair_expr).alias("p"))
-        .select("p.id_l", "p.id_r", F.col("p.hd").alias("hamming"))
-        .distinct()
-    )
-    return pairs, band_stats
 
 
 def _scan_state_key(run_key: str | None, inc_snapshot: str) -> str:

@@ -294,6 +294,76 @@ def test_link_schema_rollforward(spark, small_corpus, tmp_path):
     assert s["candidates"] > 0
 
 
+def test_link_pairs_with_salted_bands(spark, small_corpus, tmp_path):
+    """The link through the salted kernel: at max_band_size 1 and 2 the
+    touched bands are salted, and the bipartite expansion must still emit
+    only (prior, incoming) pairs, each once, with the Hamming the gate
+    checked, record every degraded band, and find every planted
+    incoming-to-prior duplicate."""
+    from dataclasses import replace
+
+    from customer_er_spark.catalog import SparkCatalog
+    from customer_er_spark.operators.candidates import band_keys
+    from customer_er_spark.operators.signatures import compute_signatures
+    from customer_er_spark.plans.incremental import link_pairs
+
+    catalog = SparkCatalog(spark, str(tmp_path / "salted_cat"))
+    initial = spark.read.parquet(f"{small_corpus['dir']}/images_initial.parquet")
+    incoming = spark.read.parquet(
+        f"{small_corpus['dir']}/images_incremental.parquet"
+    )
+    run_initial(spark, initial, catalog, CFG)
+    prior_sig = catalog.read_table("signatures")
+    inc_sig = compute_signatures(incoming, CFG).cache()
+    priors_bands = catalog.read_table("priors_bands").select(
+        "band_key", "image_id", "phash"
+    )
+    prior_ids = {r[0] for r in prior_sig.select("image_id").collect()}
+    inc_ids = {r[0] for r in inc_sig.select("image_id").collect()}
+    truth = {
+        (l, r) if l in prior_ids else (r, l)
+        for l, r in spark.read.parquet(
+            f"{small_corpus['dir']}/truth_pairs.parquet"
+        ).select("id_l", "id_r").collect()
+        if (l in prior_ids and r in inc_ids) or (r in prior_ids and l in inc_ids)
+    }
+    assert truth
+
+    # touched-band sizes, counted independently of the kernel
+    inc_bands = band_keys(inc_sig, CFG).select("band_key", "image_id")
+    touched = inc_bands.select("band_key").distinct()
+    sizes = {
+        r["band_key"]: r["n"]
+        for r in priors_bands.select("band_key", "image_id")
+        .join(touched, "band_key")
+        .unionByName(inc_bands)
+        .groupBy("band_key").agg(F.count("*").alias("n"))
+        .collect()
+    }
+    phash = {
+        **dict(prior_sig.select("image_id", "phash").collect()),
+        **dict(inc_sig.select("image_id", "phash").collect()),
+    }
+    for mbs in (1, 2):
+        cfg = replace(CFG, max_band_size=mbs)
+        pairs, band_stats = link_pairs(priors_bands, inc_sig, cfg)
+        rows = pairs.collect()
+        assert set(pairs.columns) == {"id_l", "id_r", "hamming"}
+        got = [(r["id_l"], r["id_r"]) for r in rows]
+        assert len(got) == len(set(got)), mbs  # no pair repeats
+        assert all(l in prior_ids and r in inc_ids for l, r in got), mbs
+        for r in rows:
+            h = bin((phash[r["id_l"]] ^ phash[r["id_r"]]) & (2**64 - 1))
+            assert r["hamming"] == h.count("1") <= cfg.phash_hamming_max
+        degraded = {
+            r["band_key"]
+            for r in band_stats.where("degraded").select("band_key").collect()
+        }
+        assert degraded == {k for k, n in sizes.items() if n > mbs}, mbs
+        assert truth <= set(got), (mbs, truth - set(got))
+    inc_sig.unpersist()
+
+
 def test_link_rebands_on_lineage_divergence(spark, small_corpus, tmp_path):
     """r5 advice: a crash between the signatures append and the
     priors_bands append of a never-replayed batch leaves registry records

@@ -516,10 +516,20 @@ def test_verify_pairs_catalog_mode(spark, catalog):
         (r["id_l"], r["id_r"]): r
         for r in verify_pairs(pairs, sig, cfg, catalog=catalog).collect()
     }
-    assert set(base) == set(got)
+    # candidate_pairs committed before hamming rode along carry
+    # phash_l/phash_r: they take the attach join and score the same
+    old_shape = spark.createDataFrame(
+        [("a", "b", 0, 255), ("a", "c", 0, 0)],
+        "id_l string, id_r string, phash_l long, phash_r long",
+    )
+    old = {
+        (r["id_l"], r["id_r"]): r
+        for r in verify_pairs(old_shape, sig, cfg).collect()
+    }
+    assert set(base) == set(got) == set(old)
     for k in base:
-        assert base[k]["score"] == got[k]["score"]
-        assert base[k]["is_match"] == got[k]["is_match"]
+        assert base[k]["score"] == got[k]["score"] == old[k]["score"]
+        assert base[k]["is_match"] == got[k]["is_match"] == old[k]["is_match"]
     prefix = f"verify_tmp_{cfg.config_hash()[:8]}"
     assert catalog.table_meta(f"{prefix}_hamming") is not None
     assert catalog.table_meta(f"{prefix}_base") is not None

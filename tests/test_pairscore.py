@@ -99,6 +99,29 @@ def test_mirror_preserves_global_topk(spark):
     assert fast == full
 
 
+@pytest.mark.parametrize("missing", [15, 99])
+def test_pair_scorers_reject_ids_missing_from_matrix(spark, missing):
+    """An id the broadcast matrix lacks raises, naming the id, instead of
+    scoring against a neighbouring row (15 falls between the real ids 10
+    and 20) or indexing past the end (99 is above the largest id)."""
+    from customer_er_spark.functions.pairscore import (
+        cosine_pair_scores,
+        equality_fraction_pair_scores,
+    )
+
+    ids = np.array([10, 20, 30], dtype=np.int64)
+    mat = np.arange(1, 13, dtype=np.int64).reshape(3, 4)
+    cand = spark.createDataFrame([(10, 20), (20, missing)], "l long, r long")
+    with pytest.raises(Exception, match=f"pair id {missing} is not"):
+        cosine_pair_scores(
+            spark, cand, ids, mat.astype(np.float64), l_col="l", r_col="r"
+        ).collect()
+    with pytest.raises(Exception, match=f"pair id {missing} is not"):
+        equality_fraction_pair_scores(
+            spark, cand, ids, mat, denom=4, l_col="l", r_col="r"
+        ).collect()
+
+
 def test_banded_pairs_deferred_distinct_same_set(spark, embeddings):
     from customer_er_spark.operators.banded import banded_pairs
 

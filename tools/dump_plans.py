@@ -64,9 +64,9 @@ def main() -> None:
          "window bucket-size count -> sub-band salt -> lazy-checkpoint "
          "barrier (Scan ExistingRDD below) -> co-partitioned shuffled-hash "
          "self-join on (band_key, salt) with inline Hamming gate in the "
-         "join condition -> distinct; rep chain for hot bands.  r8: the "
-         "join replaced interpreted higher-order pair expansion — see "
-         "plans/r08/*_after_full.txt for the pre-barrier subtree)",
+         "join condition -> distinct on (id_l, id_r, hamming); rep chain "
+         "for hot bands.  r8: the join replaced interpreted higher-order "
+         "pair expansion)",
          pairs)
     # verify_pairs eagerly materializes its attach-join checkpoint, so give
     # it a small slice (the plan SHAPE is what we're dumping)
@@ -86,9 +86,9 @@ def main() -> None:
 
     # the document-dedup operators now route through the same salted kernel
     # (operators/banded.py) as the flagship: explode -> repartition(band_key)
-    # -> window count (reuses exchange) -> groupBy(band_key, salt) satisfied
-    # by the same partitioning -> in-partition pair expansion, gate in
-    # codegen -> one distinct.  The static plan prints the shared exchange
+    # -> window count (reuses exchange) -> self-join on (band_key, salt)
+    # satisfied by the same partitioning, gate in the join condition ->
+    # one distinct.  The static plan prints the shared exchange
     # once per branch; at runtime exchange reuse dedups it.
     from customer_er_spark.operators.dedup import simhash_pairs
 
@@ -144,10 +144,11 @@ def main() -> None:
          f"{scan_stats['bytes_read']}/{scan_stats['bytes_total']} bytes "
          "-> bare 3-column scan of surviving files -> BroadcastHashJoin "
          "against the increment's distinct band keys -> union with "
-         "incoming bands -> ONE repartition(band_key) -> salted cross-side "
-         "expansion with inline Hamming gate -> distinct; the registry is "
-         "never exploded or window-counted, and only touched-band rows "
-         "ride the exchange)",
+         "incoming bands, side-tagged 0/1 -> the pipeline's banded kernel: "
+         "ONE repartition(band_key) -> salted self-join on (band_key, "
+         "salt) keeping l.side < r.side, inline Hamming gate, no rep "
+         "chain -> distinct; the registry is never exploded or "
+         "window-counted, and only touched-band rows ride the exchange)",
          lp)
 
     # r7 corpus-assembly operators
